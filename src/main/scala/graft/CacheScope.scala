@@ -35,6 +35,19 @@ object CacheScope {
   private val trackedCp = new java.util.HashMap[
     SparkSession, java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]]()
 
+  /** Spark logs one WARN per unpersisted local checkpoint ("was locally
+    * checkpointed, its lineage has been truncated") from the
+    * checkpointed RDD's logger. Freeing checkpoints is what this
+    * registry is for, so every release would flood the log with the
+    * expected warning — raise that one logger to ERROR, once per JVM.
+    * Errors still surface; other loggers keep their levels. Applied at
+    * the first release, after Spark has installed its log4j2
+    * configuration (which would otherwise replace the level). */
+  private lazy val quietCheckpointRelease: Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      org.apache.logging.log4j.Level.ERROR)
+
   private def pruneStopped(): Unit = {
     tracked.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
     trackedCp.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
@@ -99,7 +112,10 @@ object CacheScope {
     * must not be referenced again: its lineage is truncated, so there
     * is no recompute path. No-op on non-checkpoint plans. */
   def releaseCheckpoint(ds: Dataset[_]): Unit =
-    checkpointRdd(ds).foreach(_.unpersist(false))
+    checkpointRdd(ds).foreach { r =>
+      quietCheckpointRelease
+      r.unpersist(false)
+    }
 
   /** Unpersist every cache and registered checkpoint tracked for `s`
     * (non-blocking) and forget them. Results derived from a released
@@ -110,6 +126,9 @@ object CacheScope {
       pruneStopped(); (tracked.remove(s), trackedCp.remove(s))
     }
     if (q != null) q.forEach(_.unpersist(false))
-    if (qc != null) qc.forEach(_.unpersist(false))
+    if (qc != null) {
+      quietCheckpointRelease
+      qc.forEach(_.unpersist(false))
+    }
   }
 }

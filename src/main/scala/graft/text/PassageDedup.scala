@@ -21,20 +21,29 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (100 TB): the paper's suffix array is a single-machine
   * construct; the distributed equivalent is the k-gram posting
-  * aggregation below.
-  *   - Phase 1 (hash prefilter): count occurrences by `xxhash64(gram)`
-  *     — map-side partial aggregation reduces each task to one row per
-  *     distinct hash, and the shuffle carries 8-byte keys, never gram
-  *     text. Unique grams (the overwhelming majority of any corpus)
-  *     are eliminated here for ~16 bytes of shuffle per occurrence.
-  *   - Phase 2 (exact confirm): only hash-duplicated occurrences
-  *     re-aggregate on the gram STRING, so text shuffles only for the
-  *     tiny surviving fraction; a 64-bit collision can only ADD a
-  *     candidate to phase 2, never change the final answer — the
-  *     result is exact, not probabilistic.
+  * aggregation below. Every corpus-sized exchange carries 8-byte keys;
+  * text crosses a shuffle only one row per document or one row per
+  * candidate position:
+  *   - Phase 1 (hash prefilter): count occurrences by the rolling
+  *     window hash ([[graft.functions.HashedWordNGrams]]) — map-side
+  *     partial aggregation reduces each task to one row per distinct
+  *     hash, and the shuffle carries 8-byte keys, never gram text.
+  *     Unique grams (the overwhelming majority of any corpus) are
+  *     eliminated here.
+  *   - Phase 2 (candidates): the hash-only (doc, pos, hash) stream
+  *     probes the hot-hash set; survivors group into one candidate
+  *     list per document, which joins the documents once, and gram
+  *     strings are built only at candidate positions.
+  *   - Exact confirm: candidates count per (hash, gram STRING), so a
+  *     64-bit collision can only ADD a candidate, never change the
+  *     final answer — the result is exact, not probabilistic. This is
+  *     the one exchange keyed on text, and it carries candidates only.
   *   - Span merge is a per-document window (documents are bounded, so
-  *     per-key state is bounded); token removal is an equi anti-join
-  *     on (doc, position) — no range join anywhere.
+  *     per-key state is bounded); removal groups the positions into one
+  *     start array per document, left-joins it onto the documents once
+  *     and cuts with a linear per-document sweep
+  *     ([[graft.functions.PassageCut]]) — no token-granular shuffle and
+  *     no range join anywhere.
   */
 object PassageDedup {
 
@@ -64,32 +73,11 @@ object PassageDedup {
       .withColumnRenamed("col", "gram")
   }
 
-  /** (doc_id, pos, gram, __h): [[grams]] with the rolling 64-bit
-    * window hash ([[graft.functions.HashedWordNGrams]], index-aligned
-    * with WordNGrams by construction) zipped on — the phase-2 stream
-    * that re-derives the SAME per-position key phase 1 counted,
-    * without hashing the built string. */
-  private def gramsWithHash(df: DataFrame, idCol: String,
-      textCol: String, k: Int): DataFrame = {
-    val n = size(col("__ts"))
-    df.select(col(idCol).as("doc_id"), toks(textCol).as("__ts"))
-      .select(col("doc_id"),
-        posexplode(when(n >= k,
-          zip_with(
-            graft.functions.WordNGrams.word_ngrams(col("__ts"), k),
-            graft.functions.HashedWordNGrams
-              .hashed_word_ngrams(col("__ts"), k),
-            (g, h) => struct(g.as("gram"), h.as("__h"))))
-          .otherwise(array().cast("array<struct<gram:string,__h:bigint>>"))))
-      .select(col("doc_id"), col("pos"),
-        col("col.gram").as("gram"), col("col.__h").as("__h"))
-  }
-
-  /** (doc_id, pos, __h): the hash-ONLY gram stream — phase 1's input.
-    * No gram strings are built here at all (guide §2.3: decide with
-    * small keys, build payloads once): per position the kernel folds
-    * per-token XXH64s, so the unique-gram majority of the corpus never
-    * pays string materialization. */
+  /** (doc_id, pos, __h): the hash-ONLY gram stream — the input of both
+    * phases. No gram strings are built here at all (guide §2.3: decide
+    * with small keys, build payloads once): per position the kernel
+    * folds per-token XXH64s, so the unique-gram majority of the corpus
+    * never pays string materialization. */
   private def gramHashes(df: DataFrame, idCol: String,
       textCol: String, k: Int): DataFrame = {
     val n = size(col("__ts"))
@@ -102,40 +90,54 @@ object PassageDedup {
       .withColumnRenamed("col", "__h")
   }
 
-  /** Occurrences of hash-duplicated grams — phase 1 of the exact
-    * two-phase finder: count by the rolling window hash (8-byte
-    * shuffle keys, the only corpus-sized stage; map-side partial
-    * aggregation reduces each task to one row per distinct hash),
-    * then semi-join the string-bearing stream against the hot set.
-    * All occurrences of one gram share one hash, so the candidate set
-    * holds either every occurrence of a gram or none — collisions can
-    * only ADD candidates. The corpus is scanned twice (once hash-only,
-    * once with strings) but gram strings are built exactly ONCE — the
-    * r20 shape built them four times (hash-agg side, semi-join probe,
-    * and twice more through the confirm's double reference). */
-  private def hashCandidates(df: DataFrame, idCol: String,
-      textCol: String, k: Int): DataFrame = {
-    val hotHashes = gramHashes(df, idCol, textCol, k)
+  /** Phase 1: window hashes occurring more than once — one 8-byte-keyed
+    * aggregation (map-side partial aggregation reduces each task to one
+    * row per distinct hash). All occurrences of one gram share one
+    * hash, so this set holds every duplicated gram's hash; collisions
+    * can only ADD hashes. */
+  private def hotHashes(df: DataFrame, idCol: String, textCol: String,
+      k: Int): DataFrame =
+    gramHashes(df, idCol, textCol, k)
       .groupBy("__h").agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 1).select("__h")
-    gramsWithHash(df, idCol, textCol, k)
-      .join(hotHashes, Seq("__h"), "left_semi")
+
+  /** (doc_id, pos, __h, gram) at exactly the positions whose window hash
+    * is in `keys` (one `__h` column) — the one phase-2 candidate path.
+    * The probe is the hash-only stream (doc id, int, 8-byte hash per
+    * position); the survivors group into one bounded candidate list
+    * per document, which joins the documents ONCE, and gram strings
+    * are sliced from the document's tokens only at candidate
+    * positions. So no corpus-sized exchange carries text: strings
+    * cross a shuffle one row per document (the join) or one row per
+    * candidate (the caller's confirm). Requires unique ids. */
+  private def candidateGrams(df: DataFrame, idCol: String,
+      textCol: String, k: Int, keys: DataFrame): DataFrame = {
+    val perDoc = gramHashes(df, idCol, textCol, k)
+      .join(keys, Seq("__h"), "left_semi")
+      .groupBy("doc_id")
+      .agg(collect_list(struct(col("pos"), col("__h"))).as("__cand"))
+    df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+      .join(perDoc, Seq("doc_id"))
+      .select(col("doc_id"), toks("__text").as("__ts"), col("__cand"))
+      .select(col("doc_id"), inline(transform(col("__cand"), c =>
+        struct(c("pos").as("pos"), c("__h").as("__h"),
+          array_join(slice(col("__ts"), c("pos") + 1, lit(k)), " ")
+            .as("gram")))))
   }
 
   /** (doc_id, pos) of every occurrence of a corpus-duplicated k-gram.
-    * Two-phase exact: hash-count prefilter, string-count confirm. The
-    * confirm is a per-gram count over ONE window pass of the (tiny)
-    * candidate set — no second reference to the candidate stream (the
-    * r20 aggregate-then-probe shape recomputed the whole gram stream
-    * per reference) and no per-gram occurrence LIST (the r21
+    * Two-phase exact: hash-count prefilter, string-count confirm over
+    * the candidates. The confirm is a per-gram count over ONE window
+    * pass — no per-gram occurrence LIST (the r21
     * `collect_list(struct(doc_id, pos))` built one unbounded in-memory
     * row per gram; a boilerplate gram — cookie banner, license header
     * — has millions of occurrences at 100 TB, an executor OOM.
     * WindowExec buffers its partition in a spillable row array, so a
-    * hot gram costs disk, never memory — guide §5). */
+    * hot gram costs disk, never memory — guide §5). `idCol` must be
+    * unique. */
   def duplicatedPositions(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame =
-    hashCandidates(df, idCol, textCol, k)
+    candidateGrams(df, idCol, textCol, k, hotHashes(df, idCol, textCol, k))
       // partition key leads with the 8-byte window hash: equal grams ⟹
       // equal hashes (the gram is the ' '-join of exactly its k tokens,
       // so gram equality ⟺ token-window equality), hence counting per
@@ -151,11 +153,11 @@ object PassageDedup {
 
   /** (gram, n_occurrences, n_docs) for every corpus-duplicated k-gram —
     * the audit surface behind top-duplicated-passage reports. Same
-    * two-phase discipline: gram TEXT aggregates only for the
-    * hash-duplicated fraction, never the unique majority. */
+    * candidate path: gram TEXT aggregates only for the hash-duplicated
+    * fraction, never the unique majority. `idCol` must be unique. */
   def duplicatedGramStats(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame =
-    hashCandidates(df, idCol, textCol, k)
+    candidateGrams(df, idCol, textCol, k, hotHashes(df, idCol, textCol, k))
       .groupBy("gram")
       .agg(count(lit(1)).as("n_occurrences"),
         countDistinct(col("doc_id")).as("n_docs"))
@@ -186,19 +188,16 @@ object PassageDedup {
         .select("doc_id", "pos")
     else {
       // corpus-fraction reference (e.g. curate v7's eval split): the
-      // r20 shape semi-joined on the gram STRING, so whichever side
-      // shuffled carried k-token text. Now the prefilter semi-join
-      // carries 8-byte window hashes (guide §2.3 — the same rolling
-      // kernel on both sides: the ref gram re-tokenized by the ' '
-      // join it was built with yields the identical window hash), and
-      // only the surviving candidates (matches + rare collisions)
-      // reach the exact string confirm — which keeps the result
-      // identical, never probabilistic.
+      // candidate path probes with 8-byte window hashes (guide §2.3 —
+      // the same rolling kernel on both sides: the ref gram
+      // re-tokenized by the ' ' join it was built with yields the
+      // identical window hash), and only the surviving candidates
+      // (matches + rare collisions) reach the exact string semi-join —
+      // which keeps the result identical, never probabilistic.
       val refH = ref.select(
         element_at(graft.functions.HashedWordNGrams.hashed_word_ngrams(
           split(col("gram"), " ", -1), k), 1).as("__h")).distinct()
-      gramsWithHash(df, idCol, textCol, k)
-        .join(refH, Seq("__h"), "left_semi")
+      candidateGrams(df, idCol, textCol, k, refH)
         .join(ref, Seq("gram"), "left_semi")
         .select("doc_id", "pos")
     }
@@ -243,30 +242,30 @@ object PassageDedup {
     removeFromPositions(df, idCol, textCol,
       duplicatedPositions(df, idCol, textCol, k), k)
 
-  /** [[removeDuplicatePassages]] over a precomputed position set. */
+  /** [[removeDuplicatePassages]] over a precomputed (doc_id, pos)
+    * position set. `idCol` must be unique and non-null: each document
+    * row is cut independently by its own start list.
+    *
+    * The positions group into one start array per document, which
+    * left-joins the documents ONCE; the cut itself is the linear
+    * per-document sweep of [[graft.functions.PassageCut]]. So the only
+    * exchanges are per document (one start array, one text row) —
+    * no token-granular shuffle. */
   def removeFromPositions(df: DataFrame, idCol: String,
       textCol: String, p: DataFrame, k: Int): DataFrame = {
-    val base = df.select(col(idCol).as("doc_id"), toks(textCol).as("__ts"))
-    // covered positions, deduplicated — the join stays equi on
-    // (doc_id, idx); spans are never range-probed
-    val covered = p
-      .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + (k - 1))).as("idx"))
-      .distinct()
-    val tokens = base.select(col("doc_id"), posexplode(col("__ts")))
-      .withColumnRenamed("pos", "idx")
-      .withColumnRenamed("col", "tok")
-    val kept = tokens.join(covered, Seq("doc_id", "idx"), "left_anti")
-    val reasm = kept.groupBy("doc_id")
-      .agg(count(lit(1)).as("__n_kept"),
-        concat_ws(" ", transform(
-          array_sort(collect_list(struct(col("idx"), col("tok")))),
-          s => s.getField("tok"))).as("__clean"))
-    base.select(col("doc_id"), size(col("__ts")).as("n_tokens"))
-      .join(reasm, Seq("doc_id"), "left_outer")
+    val starts = p.groupBy("doc_id")
+      .agg(collect_list(col("pos").cast("int")).as("__starts"))
+    val cut = graft.functions.PassageCut.passage_cut(col("__ts"),
+      coalesce(col("__starts"), array().cast("array<int>")), k)
+    df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+      .join(starts, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), toks("__text").as("__ts"), col("__starts"))
+      .select(col("doc_id"), size(col("__ts")).as("n_tokens"),
+        cut.as("__cut"))
+      // a null token array (null text) cuts nothing: n_removed is
+      // n_tokens, the relational form's `n_tokens - 0`
       .select(col("doc_id"), col("n_tokens"),
-        (col("n_tokens") - coalesce(col("__n_kept"), lit(0L)))
-          .cast("int").as("n_removed"),
-        coalesce(col("__clean"), lit("")).as("clean_text"))
+        coalesce(col("__cut.n_removed"), col("n_tokens")).as("n_removed"),
+        coalesce(col("__cut.clean_text"), lit("")).as("clean_text"))
   }
 }

@@ -56,6 +56,21 @@ class CacheScopeSpec extends AnyFunSuite {
       "releaseCheckpoint must free the generation's blocks")
   }
 
+  test("checkpoint release logs no unpersist WARN; errors still surface") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    val s = spark.newSession()
+    val cp = CacheScope.trackLocalCheckpoint(s.range(10).toDF("id"))
+    assert(cp.count() == 10)
+    CacheScope.releaseAll(s)
+    val rddLog = LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+    assert(!rddLog.isEnabled(Level.WARN),
+      "the per-checkpoint unpersist WARN must be off")
+    assert(rddLog.isEnabled(Level.ERROR), "errors must still surface")
+    // scoped to that one logger: Spark's other WARNs keep flowing
+    assert(LogManager.getLogger("org.apache.spark.rdd.RDD")
+      .isEnabled(Level.WARN))
+  }
+
   test("releaseCheckpoint is a no-op on non-checkpoint plans") {
     CacheScope.releaseCheckpoint(spark.range(10).toDF("id"))
   }
