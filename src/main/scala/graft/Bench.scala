@@ -1,16 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Warm the JVM on the tiny SF so the first timed query doesn't
     // absorb startup: codegen + parquet machinery (entry), the
     // interpreted higher-order-function paths of the shingle pipeline
@@ -20,8 +12,8 @@ object Bench {
     try SparkEntry.entry(spark).queryExecution.toRdd.count()
     catch { case _: Throwable => () }
     // Skipped when benching the warm dir itself: the dedup warm queries
-    // populate SessionMemo shared builds keyed on (session, dir), and
-    // reusing them would zero out the cost the explicit `*_build`
+    // populate CacheScope.memo shared builds keyed on (session, dir),
+    // and reusing them would zero out the cost the explicit `*_build`
     // entries below are meant to measure.
     if (sfDir != warmSf) {
       Seq("dedup_ngram_jaccard", "dedup_simhash", "sim_cosine_topk").foreach { q =>
@@ -67,28 +59,32 @@ object Bench {
             "consumer query; numbers are not comparable to full runs")
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
+    // Seconds `body` took, or -1 if it threw — a failed entry is
+    // recorded as -1, never as a (fast) timing, and its cause goes to
+    // stderr (stdout and the JSON file stay the driver's contract).
+    def timed(name: String)(body: => Unit): Double = {
+      val t0 = System.nanoTime()
+      try { body; (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        System.err.println(
+          s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        -1.0
+      }
+    }
     val builds: Seq[(String, Double)] =
       SparkEntry.benchBuilds.toSeq.filter(b => keep(b._1))
         .sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir); true }
-                 catch { case _: Throwable => false }
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        name -> timed(name)(fn(spark, sfDir))
       }
     // Alphabetical order: stable across rounds so per-query numbers
     // stay comparable between rounds.
     def onePass(): Seq[(String, Double)] =
       SparkEntry.queries.toSeq.filter(q => keep(q._1))
         .sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
         // toRdd.count() materializes every output column of the plan —
         // a plain .count() would let Catalyst prune the computed columns
         // and time only a row count.
-        val ok =
-          try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-          catch { case _: Throwable => false }
-        // a failed query is recorded as -1, never as a (fast) timing
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        name -> timed(name)(fn(spark, sfDir).queryExecution.toRdd.count())
       }
     // BASELINE.md records 2× same-code box swings: identical code has
     // measured 53→118s within an hour as box contention rose. With
@@ -146,7 +142,7 @@ object Bench {
     println(toJson(failedFirst.take(20),
       s""","n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"detail":"$esc""""))
     // lifecycle hygiene: no graft-pinned blocks outlive the run
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
     // a run with any -1 sentinel must not exit 0: scripts gating on rc
     // would otherwise treat a regressed run as passing

@@ -2,38 +2,74 @@ package graft
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Session-scoped registry of caches the library creates INSIDE
-  * operators (e.g. the df-capped shingle index in
-  * [[graft.dedup.Dedup.jaccardPairsFromShingles]]), so a long-lived
-  * consumer session has an explicit release point instead of pinning
-  * blocks until LRU eviction. One-shot mains (Verify/Bench) call
-  * [[graft.queries.SessionMemo.release]], which drains this too.
+import scala.collection.mutable
+
+/** The single per-session registry of what graft pins: the lifecycle
+  * contract for everything the library keeps alive between calls.
   *
-  * Lifecycle note: a Dataset strongly references its SparkSession, so
-  * a WeakHashMap keyed on the session would never collect (the
+  *   - '''memo''' ([[memo]]): a value built once per (session, dir,
+  *     tag) and shared by several registry queries — loaded tables,
+  *     written fixtures, streaming state, built indexes. Registry
+  *     queries are read-only over immutable testdata dirs, so within
+  *     one live session the memo is by design.
+  *   - '''cache''' ([[track]]): a Dataset an operator persists for its
+  *     own several consumers (e.g. the df-capped shingle index in
+  *     [[graft.dedup.Dedup.jaccardPairsFromShingles]]).
+  *   - '''checkpoint''' ([[trackLocalCheckpoint]],
+  *     [[registerCheckpoint]]): `localCheckpoint` storage. Its blocks
+  *     are the only copy of the data (lineage truncated).
+  *
+  * [[releaseAll]] is the one release point: it drains memos (only the
+  * Dataset values that were actually built hold storage), then caches,
+  * then checkpoints, and forgets the session. What happens next:
+  *   - a released memo is rebuilt by the next [[memo]] call;
+  *   - results derived from a released cache recompute;
+  *   - results derived from a released checkpoint do NOT recompute, so
+  *     every consumer must have been evaluated before the release.
+  * [[releaseCheckpoint]] frees one superseded generation early (and
+  * unregisters it); the same no-recompute rule applies to it.
+  *
+  * Retention: one entry per session behind one lock, with strong keys.
+  * A Dataset (and every memo thunk) references its SparkSession, so a
+  * WeakHashMap keyed on the session would never collect (the
   * value→key indirect-reference trap in the WeakHashMap javadoc), and
-  * weak Dataset values would lose the unpersist handle the moment the
-  * caller drops its reference — re-pinning blocks, the exact problem
-  * this class exists to solve. So: strong references, plus a sweep
-  * that forgets STOPPED sessions on every call (a stopped context's
-  * blocks are already freed by Spark). A service that cycles sessions
-  * through `session.stop()` therefore does not accumulate; dropping a
-  * live session without stop() leaks the session itself regardless of
-  * this registry.
+  * weak values would lose the unpersist handle. Instead every call
+  * prunes the entries of STOPPED contexts (Spark has already freed
+  * their blocks). A service that cycles sessions through
+  * `session.stop()` therefore does not accumulate; a live session
+  * dropped without stop() or [[releaseAll]] keeps its entry.
   */
 object CacheScope {
-  private val tracked = new java.util.HashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]]()
+  /** Lazy holder: registered under the lock cheaply, built OUTSIDE it
+    * — nested memo calls from inside a build thunk (e.g. a memoized
+    * corpus loading a memoized table) are legal. `lazy val` gives
+    * once-only per-key construction under concurrency. */
+  private final class Holder(thunk: () => AnyRef) {
+    @volatile private var done = false
+    lazy val value: AnyRef = { val v = thunk(); done = true; v }
+    /** The value if the thunk already ran; never triggers a build. */
+    def builtValue: Option[AnyRef] = if (done) Some(value) else None
+  }
 
-  /** localCheckpoint storage registered for [[releaseAll]] — kept
-    * apart from `tracked` because the release semantics differ: a
-    * released CACHE recomputes, a released CHECKPOINT's blocks are the
-    * only copy of its data (lineage truncated), so these are freed
-    * only at the session-level release point, after every consumer of
-    * the round's results has been evaluated. */
-  private val trackedCp = new java.util.HashMap[
-    SparkSession, java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]]()
+  /** Everything registered for one session; guarded by `sessions`. */
+  private final class Entry {
+    val memos = mutable.HashMap.empty[String, Holder]
+    val caches = mutable.ArrayBuffer.empty[Dataset[_]]
+    val checkpoints = mutable.LinkedHashSet.empty[RDD[_]]
+    def isEmpty: Boolean =
+      memos.isEmpty && caches.isEmpty && checkpoints.isEmpty
+  }
+
+  private val sessions = mutable.HashMap.empty[SparkSession, Entry]
+
+  /** Run `f` on `s`'s entry (created on demand) under the one lock. */
+  private def withEntry[T](s: SparkSession)(f: Entry => T): T =
+    sessions.synchronized {
+      sessions.filterInPlace((k, _) => !k.sparkContext.isStopped)
+      f(sessions.getOrElseUpdate(s, new Entry))
+    }
 
   /** Spark logs one WARN per unpersisted local checkpoint ("was locally
     * checkpointed, its lineage has been truncated") from the
@@ -48,41 +84,33 @@ object CacheScope {
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
 
-  private def pruneStopped(): Unit = {
-    tracked.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-    trackedCp.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-  }
+  /** The value memoized under (`s`, `dir`, `tag`), built by `build` on
+    * first use. */
+  def memo[T <: AnyRef](s: SparkSession, dir: String, tag: String)(
+      build: => T): T =
+    withEntry(s)(_.memos.getOrElseUpdate(s"$tag|$dir",
+      new Holder(() => build))).value.asInstanceOf[T]
 
   /** Persist `df` (MEMORY_AND_DISK, `.cache()` semantics) and remember
     * it for [[releaseAll]]. */
   def track[T](df: Dataset[T]): Dataset[T] = {
-    val q = tracked.synchronized {
-      pruneStopped()
-      var v = tracked.get(df.sparkSession)
-      if (v == null) {
-        v = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
-        tracked.put(df.sparkSession, v)
-      }
-      v
-    }
-    q.add(df.cache())
+    withEntry(df.sparkSession)(_.caches += df.cache())
     df
   }
 
   /** The materialized RDD behind a `localCheckpoint()`ed Dataset — the
-    * handle its storage blocks are freed through. Empty for any other
-    * plan shape (then there is nothing to free). */
+    * handle its storage blocks are freed through. Only a plan whose
+    * ROOT is the checkpoint matches: a frame derived from a checkpoint
+    * must not free the checkpoint it reads. */
   private def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
-    ds.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    ds.queryExecution.logical match {
+      case r: LogicalRDD => Some(r.rdd)
+      case _ => None
     }
 
-  /** Eager `localCheckpoint` whose storage blocks are REGISTERED for
-    * [[releaseAll]] (r21 verdict: per-call checkpoints lingered until
-    * the RDD was GC'd and the ContextCleaner noticed — orphaned blocks
-    * for the rest of the session). Consumers must be evaluated before
-    * the session-level release: unlike a cache, a released checkpoint
-    * does not recompute. */
+  /** Eager `localCheckpoint` whose storage blocks are registered for
+    * [[releaseAll]]. Consumers must be evaluated before the release:
+    * unlike a cache, a released checkpoint does not recompute. */
   def trackLocalCheckpoint[T](ds: Dataset[T]): Dataset[T] = {
     val cp = ds.localCheckpoint()
     registerCheckpoint(cp)
@@ -94,41 +122,44 @@ object CacheScope {
     * the loop (re-checkpointing there would copy the blocks). */
   def registerCheckpoint(cp: Dataset[_]): Unit =
     checkpointRdd(cp).foreach { r =>
-      val q = tracked.synchronized {
-        pruneStopped()
-        var v = trackedCp.get(cp.sparkSession)
-        if (v == null) {
-          v = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
-          trackedCp.put(cp.sparkSession, v)
-        }
-        v
-      }
-      q.add(r)
+      withEntry(cp.sparkSession)(_.checkpoints += r)
     }
 
-  /** Free the storage behind a `localCheckpoint()`ed Dataset NOW — for
-    * iteration loops whose superseded generations are provably dead
+  /** Free the storage behind a `localCheckpoint()`ed Dataset NOW and
+    * unregister it — for superseded generations that are provably dead
     * (e.g. rank vector i−1 once vector i is materialized). The Dataset
-    * must not be referenced again: its lineage is truncated, so there
-    * is no recompute path. No-op on non-checkpoint plans. */
+    * must not be referenced again: there is no recompute path. No-op
+    * unless the plan root is a checkpoint. */
   def releaseCheckpoint(ds: Dataset[_]): Unit =
     checkpointRdd(ds).foreach { r =>
+      // an emptied entry goes too: a stream's foreachBatch runs on a
+      // cloned session that nothing releases or stops
+      sessions.synchronized(sessions.get(ds.sparkSession).foreach { e =>
+        e.checkpoints -= r
+        if (e.isEmpty) sessions.remove(ds.sparkSession)
+      })
       quietCheckpointRelease
       r.unpersist(false)
     }
 
-  /** Unpersist every cache and registered checkpoint tracked for `s`
-    * (non-blocking) and forget them. Results derived from a released
-    * CACHE recompute; results derived from a released CHECKPOINT must
-    * already have been evaluated (see [[trackLocalCheckpoint]]). */
-  def releaseAll(s: SparkSession): Unit = {
-    val (q, qc) = tracked.synchronized {
-      pruneStopped(); (tracked.remove(s), trackedCp.remove(s))
+  /** Ids of the checkpoint RDDs registered for `s`. */
+  private[graft] def checkpointIds(s: SparkSession): Seq[Int] =
+    sessions.synchronized(sessions.get(s).toSeq
+      .flatMap(_.checkpoints.map(_.id)))
+
+  /** Release everything registered for `s` (non-blocking unpersists)
+    * and forget the session: built memo Datasets, then caches, then
+    * checkpoints. Unbuilt memos are dropped without being forced. */
+  def releaseAll(s: SparkSession): Unit =
+    sessions.synchronized(sessions.remove(s)).foreach { e =>
+      e.memos.values.flatMap(_.builtValue).foreach {
+        case df: Dataset[_] => df.unpersist(false)
+        case _ => ()   // non-Dataset memo values hold no storage
+      }
+      e.caches.foreach(_.unpersist(false))
+      if (e.checkpoints.nonEmpty) {
+        quietCheckpointRelease
+        e.checkpoints.foreach(_.unpersist(false))
+      }
     }
-    if (q != null) q.forEach(_.unpersist(false))
-    if (qc != null) {
-      quietCheckpointRelease
-      qc.forEach(_.unpersist(false))
-    }
-  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for representative queries so
   * plan regressions (lost pushdown, missed broadcast, codegen breaks)
   * are visible in review. Usage:
@@ -68,12 +66,7 @@ object Explain {
         "mm_ts_exact", "mm_avif_exact", "mm_oggflac_exact",
         "warc_ingest", "warc_extract", "pipeline_curate_v11",
         "pipeline_curate_v12")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Dev tool (r21 optimization round): run one registry query or build
   * with a SparkListener attached and print per-job wall time + task
@@ -13,19 +12,12 @@ import org.apache.spark.sql.SparkSession
 object JobProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     try SparkEntry.entry(spark).queryExecution.toRdd.count()
     catch { case _: Throwable => () }
 
     case class J(id: Int, var start: Long = 0L, var end: Long = 0L,
-      var tasks: Int = 0, var stages: Int = 0, var desc: String = "")
+      var stages: Int = 0, var desc: String = "")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -43,10 +35,6 @@ object JobProf {
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val j = jobs.get(e.jobId); if (j != null) j.end = e.time
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        // attribute tasks to the most recent job containing the stage
-        jobs.values.forEach { j => () }
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -82,7 +70,7 @@ object JobProf {
           }
       }
     }
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
   }
 }

@@ -236,7 +236,6 @@ object Stress {
       Tables.embeddings(s, d), 0.35, numCells = cells)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val small = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL",
       "/root/testdata/sf0.01")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
@@ -244,12 +243,7 @@ object Stress {
     val work = sys.env.getOrElse("SPARK_GRAFT_STRESS_WORK",
       s"${sys.props("java.io.tmpdir")}/graft_sf1")
     val amp = sys.env.getOrElse("SPARK_GRAFT_AMP", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // JVM/codegen warm-up on the tiny SF (same rationale as Bench)
     try SparkEntry.entry(spark).queryExecution.toRdd.count()
@@ -260,7 +254,7 @@ object Stress {
           .queryExecution.toRdd.count()
         catch { case _: Throwable => () }
       }
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
 
     amplify(spark, base, work, amp)
 
@@ -288,7 +282,7 @@ object Stress {
         val scaled = "dedup_semantic_cells_scaled" -> timed(
           semanticScaled(spark, dir, cells)
             .queryExecution.toRdd.count())
-        graft.queries.SessionMemo.release(spark)
+        CacheScope.releaseAll(spark)
         System.err.println(s"stress: $label done")
         label -> (builds ++ entries :+ scaled)
     }
@@ -325,7 +319,7 @@ object Stress {
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       json.getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
   }
 }

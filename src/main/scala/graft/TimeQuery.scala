@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query profiler: time one registry entry N times and
   * dump its formatted physical plan — the fast feedback loop for plan
   * iteration that Bench (all 176 entries) is too slow for.
@@ -14,13 +12,7 @@ object TimeQuery {
     val name = args(1)
     val runs = args.lift(2).flatMap(_.toIntOption).getOrElse(3)
     val showPlan = args.contains("--plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val fn = SparkEntry.queries(name)
     if (showPlan) println(fn(spark, sfDir).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))
@@ -32,7 +24,7 @@ object TimeQuery {
       t
     }
     println(f"TIMEQ $name median: ${ts.sorted.apply((runs - 1) / 2)}%.3f s")
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     spark.stop()
   }
 }

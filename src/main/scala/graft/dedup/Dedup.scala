@@ -149,7 +149,7 @@ object Dedup {
       .filter(col("__df") <= maxShingleDf)
     // tracked cache (not bare .cache()): three consumers below, but a
     // long-lived session must be able to drop it — CacheScope.releaseAll
-    // / SessionMemo.release is the lifecycle point (VERDICT r4 nit)
+    // is the lifecycle point (VERDICT r4 nit)
     val sh = graft.CacheScope.track(shAll.join(keep, Seq("shingle")))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     // a shingle occurring in exactly ONE doc cannot contribute to any
@@ -289,7 +289,7 @@ object Dedup {
     // local checkpoints live in executor storage.
     // registered (not bare): the final labeling joins `nodes` (derived
     // from these edges), so the blocks must live until the caller has
-    // consumed the result — SessionMemo/CacheScope release is that point
+    // consumed the result — CacheScope.releaseAll is that point
     val edges = graft.CacheScope.trackLocalCheckpoint(
       pairs.select(col("id1").as("a"), col("id2").as("b"))
         .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))

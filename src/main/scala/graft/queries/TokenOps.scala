@@ -249,7 +249,7 @@ object TokenOps extends QueryModule {
     * context totals persisted (they feed three entries), V scalar. */
   private def lmModel(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Long) =
-    SessionMemo(s, d, "bigram_lm") {
+    graft.CacheScope.memo(s, d, "bigram_lm") {
       val docs = Tables.documents(s, d)
       val counts = graft.text.BigramLm
         .trainCounts(docs, "doc_id", "text").persist()
@@ -317,7 +317,7 @@ object TokenOps extends QueryModule {
     * cells equal the one-shot batch sketch (sketch addition is exact —
     * the mergeability CMS exists for). Built once per (session, dir). */
   private def hhStreamCells(s: SparkSession, d: String): String =
-    SessionMemo(s, d, "hh_stream_cells") {
+    graft.CacheScope.memo(s, d, "hh_stream_cells") {
       import graft.text.CountMin
       val dir = java.nio.file.Files.createTempDirectory("hh_stream")
         .toString + "/cells"

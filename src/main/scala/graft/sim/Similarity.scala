@@ -404,7 +404,16 @@ object Similarity {
     * by cell (the materialized posting lists); centroids go to a
     * metadata store. Build once, serve many query batches. */
   case class IvfIndex(centroids: Array[Array[Double]], cells: DataFrame,
-      vecs: DataFrame)
+      vecs: DataFrame) {
+    /** Free this generation's checkpointed `cells` and `vecs` now —
+      * for an index superseded by [[appendToIvfIndex]] once the new
+      * generation is built. The index must not be queried afterwards.
+      * No-op on a loaded (parquet-backed) index. */
+    def release(): Unit = {
+      graft.CacheScope.releaseCheckpoint(cells)
+      graft.CacheScope.releaseCheckpoint(vecs)
+    }
+  }
 
   /** Build the IVF index — the expensive, corpus-wide, query-independent
     * part of [[ivfTopK]], split out so production callers amortize it
@@ -455,6 +464,8 @@ object Similarity {
     * between retrains, append keeps the index complete, and recall
     * degrades only as far as the drift (IvfAppendSpec pins append ≡
     * frozen-centroid rebuild EXACTLY, so there is no additional loss).
+    * `idx` stays queryable; a caller that replaces it calls
+    * `idx.release()` so a long session pins one generation, not N.
     */
   def appendToIvfIndex(idx: IvfIndex, newEmbeddings: DataFrame,
       checkOverlap: Boolean = true): IvfIndex = {
@@ -472,10 +483,13 @@ object Similarity {
     // localCheckpoint like buildIvfIndex's cells: without it every
     // query batch re-runs the increment's assignment, and chained
     // daily appends would compound N-deep union plans
-    IvfIndex(idx.centroids,
+    val next = IvfIndex(idx.centroids,
       graft.CacheScope.trackLocalCheckpoint(
         idx.cells.unionByName(assignCells(nv, idx.centroids))),
       graft.CacheScope.trackLocalCheckpoint(idx.vecs.unionByName(nv)))
+    // both eager checkpoints above have read the increment: it is dead
+    graft.CacheScope.releaseCheckpoint(nv)
+    next
   }
 
   /** Persist a built index: centroids as a C-row metadata parquet,

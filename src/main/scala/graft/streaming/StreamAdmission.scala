@@ -255,7 +255,8 @@ object StreamAdmission {
     * distributed flag+commit; streaming operator state stays empty
     * (dedup state lives in the parquet tables), so restarts replay
     * only the unfinished batch and [[flagBatch]]'s id skip makes the
-    * replay converge. */
+    * replay converge. Each batch's flags are released as soon as the
+    * batch commits: nothing reads them here. */
   def start(stream: DataFrame, statePath: String, checkpoint: String,
       idCol: String, textCol: String, tau: Double = 0.3,
       maxShingleDf: Long = 1000L, expectedBatch: Long = 1L << 20,
@@ -264,9 +265,9 @@ object StreamAdmission {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        admitAndCommit(batch.sparkSession, batch, statePath, idCol,
-          textCol, tau, maxShingleDf, expectedBatch)
-        ()
+        graft.CacheScope.releaseCheckpoint(admitAndCommit(
+          batch.sparkSession, batch, statePath, idCol, textCol, tau,
+          maxShingleDf, expectedBatch))
       }
       .start()
 

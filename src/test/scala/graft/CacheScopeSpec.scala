@@ -1,15 +1,18 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Lifecycle checks for the r22 checkpoint registry (r21 verdict ask
-  * #4): registered localCheckpoints free their storage blocks at
-  * releaseAll, releaseCheckpoint frees a superseded generation
-  * immediately, and the iterative operators that release generations
-  * in-loop still compute correct results (a wrongly-early release
-  * would fail them with missing-checkpoint-block errors, not wrong
-  * numbers — localCheckpoint has no recompute path).
+/** Lifecycle checks for the session-resource registry: memoized
+  * Datasets, tracked caches and registered localCheckpoints are freed
+  * by releaseAll of their own session only, releaseCheckpoint frees
+  * (and unregisters) a superseded generation immediately but never the
+  * source of a derived frame, and the iterative operators that release
+  * generations in-loop still compute correct results (a wrongly-early
+  * release would fail them with missing-checkpoint-block errors, not
+  * wrong numbers — localCheckpoint has no recompute path).
   *
   * Assertions are keyed on the EXACT checkpoint RDD id (not global
   * block counts): suites share one test JVM and may run concurrently,
@@ -73,6 +76,79 @@ class CacheScopeSpec extends AnyFunSuite {
 
   test("releaseCheckpoint is a no-op on non-checkpoint plans") {
     CacheScope.releaseCheckpoint(spark.range(10).toDF("id"))
+  }
+
+  test("releaseAll drops a memoized Dataset's cache; memo rebuilds") {
+    val s = spark.newSession()
+    var builds = 0
+    def memoized = CacheScope.memo(s, "dir", "cache_scope_a") {
+      builds += 1
+      s.range(0, 1001, 1, 3).toDF("memo_a").cache()
+    }
+    val first = memoized
+    assert(first.count() == 1001)
+    assert((memoized eq first) && builds == 1, "memo builds a key once")
+    assert(first.storageLevel != StorageLevel.NONE)
+    CacheScope.releaseAll(s)
+    assert(first.storageLevel == StorageLevel.NONE,
+      "releaseAll must unpersist the built memo value")
+    val second = memoized
+    assert(builds == 2 && !(second eq first), "released memo rebuilds")
+    assert(second.count() == 1001)
+    CacheScope.releaseAll(s)
+  }
+
+  test("releaseAll(s1) leaves s2's memos, caches and checkpoints") {
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    // distinct plans per session: the cache manager is shared across
+    // sessions, so equal plans would share one cache entry
+    def fill(s: SparkSession, start: Long) = {
+      val m = CacheScope.memo(s, "dir", "cache_scope_b") {
+        s.range(start, start + 1002, 1, 3).toDF("m").cache()
+      }
+      val c = CacheScope.track(s.range(start, start + 1003, 1, 3).toDF("c"))
+      val cp = CacheScope.trackLocalCheckpoint(s.range(1004).toDF("id"))
+      assert(m.count() == 1002 && c.count() == 1003 && cp.count() == 1004)
+      (m, c, cp)
+    }
+    val (_, c1, cp1) = fill(s1, 0L)
+    val (m2, c2, cp2) = fill(s2, 1L << 20)
+    CacheScope.releaseAll(s1)
+    // (s1's memo release is the case above)
+    assert(c1.storageLevel == StorageLevel.NONE)
+    assert(awaitUnpinned(cpRddId(cp1)))
+    assert(m2.storageLevel != StorageLevel.NONE, "s2's memo was released")
+    assert(c2.storageLevel != StorageLevel.NONE, "s2's cache was released")
+    assert(pinned(cpRddId(cp2)), "s2's checkpoint was released")
+    assert(CacheScope.checkpointIds(s2).contains(cpRddId(cp2)))
+    assert(CacheScope.memo[DataFrame](s2, "dir", "cache_scope_b")(
+      fail("s2's memo was rebuilt")) eq m2)
+    assert(cp2.count() == 1004)
+    CacheScope.releaseAll(s2)
+  }
+
+  test("releaseCheckpoint on a derived frame leaves the checkpoint") {
+    val s = spark.newSession()
+    val cp = CacheScope.trackLocalCheckpoint(s.range(1005).toDF("id"))
+    val id = cpRddId(cp)
+    assert(cp.count() == 1005)
+    CacheScope.releaseCheckpoint(cp.filter(col("id") % 2 === 0))
+    assert(pinned(id), "a derived plan must not free its source")
+    assert(cp.count() == 1005)
+    CacheScope.releaseAll(s)
+  }
+
+  test("releaseCheckpoint unregisters the checkpoint") {
+    val s = spark.newSession()
+    val keep = CacheScope.trackLocalCheckpoint(s.range(1006).toDF("id"))
+    val gen = CacheScope.trackLocalCheckpoint(s.range(1007).toDF("id"))
+    assert(CacheScope.checkpointIds(s).size == 2)
+    CacheScope.releaseCheckpoint(gen)
+    assert(CacheScope.checkpointIds(s) == Seq(cpRddId(keep)),
+      "the registry must drop a released checkpoint")
+    assert(awaitUnpinned(cpRddId(gen)))
+    CacheScope.releaseAll(s)
+    assert(CacheScope.checkpointIds(s).isEmpty)
   }
 
   test("iterative operators stay correct with in-loop releases") {

@@ -18,10 +18,10 @@ class DataOpsSpec extends AnyFunSuite {
   private def docs = Tables.documents(spark, sf001)
   private def embs = Tables.embeddings(spark, sf001)
 
-  test("SessionMemo.release leaves no graft-pinned blocks (cache lifecycle)") {
+  test("CacheScope.releaseAll leaves no graft-pinned blocks (cache lifecycle)") {
     // other suites share this JVM/session, so assert RELATIVELY: after
     // exercising the memoized paths AND the operator-internal tracked
-    // cache, release() must leave no persisted RDDs beyond what was
+    // cache, releaseAll must leave no persisted RDDs beyond what was
     // already pinned before this test ran
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // memoized registry paths (shingles, jaccard pairs, clusters) …
@@ -30,11 +30,11 @@ class DataOpsSpec extends AnyFunSuite {
     Dedup.jaccardPairs(docs, "doc_id", "text", 0.3).count()
     assert(spark.sparkContext.getPersistentRDDs.keySet.size > before.size,
       "expected the exercised paths to pin blocks before release")
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
     // local-checkpoint blocks (CC's lineage truncation) are NOT leaks:
     // they hold no CacheManager reference, so ContextCleaner unpersists
     // them as soon as the derived datasets are unreachable — the
-    // assertion targets the strongly-referenced cache entries release()
+    // assertion targets the strongly-referenced cache entries releaseAll
     // is responsible for
     val after = spark.sparkContext.getPersistentRDDs
       .filterNot(_._2.isCheckpointed).keySet
@@ -43,7 +43,7 @@ class DataOpsSpec extends AnyFunSuite {
     // released ≠ broken: the same query still answers (rebuilds memo)
     assert(graft.SparkEntry.queries("dedup_clusters")(spark, sf001)
       .count() > 0)
-    graft.queries.SessionMemo.release(spark)
+    CacheScope.releaseAll(spark)
   }
 
   test("PQ exhaustive rerank equals brute force bit-for-bit") {

@@ -45,6 +45,54 @@ class IvfAppendSpec extends AnyFunSuite {
     assert(ex === bf)
   }
 
+  test("long session: chained appends, each releasing its predecessor, " +
+      "pin one generation") {
+    val s = spark.newSession()
+    val e = Tables.embeddings(s, sf0001)
+    val n = 4
+    def slice(i: Int) = e.filter(col("vec_id") % (n + 1) === i)
+    def cpId(df: DataFrame): Int = df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case p => fail(s"expected a checkpoint-rooted plan, got ${p.nodeName}")
+    }
+    // every RDD this chain creates has a larger id than the marker
+    val marker = s.sparkContext.emptyRDD[Int].id
+    var idx = Similarity.buildIvfIndex(slice(0), numCells = 8, iters = 2)
+    val superseded = Seq.newBuilder[Int]
+    for (i <- 1 to n) {
+      val next = Similarity.appendToIvfIndex(idx, slice(i))
+      superseded ++= Seq(cpId(idx.cells), cpId(idx.vecs))
+      idx.release()
+      idx = next
+    }
+    val live = Set(cpId(idx.cells), cpId(idx.vecs))
+    assert(CacheScope.checkpointIds(s).toSet == live,
+      "the registry must hold only the live generation")
+    def pinnedByChain = spark.sparkContext.getPersistentRDDs.keySet
+      .filter(_ > marker)
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (pinnedByChain != live && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(pinnedByChain == live,
+      s"superseded ${superseded.result()}; pinned $pinnedByChain")
+    // the live generation alone answers: exhaustive probe = brute force
+    val ex = rows(Similarity.ivfQuery(idx,
+      col("vec_id") % 50 === 0, k = 10, nprobe = 8))
+    assert(ex === rows(Similarity.bruteForceTopK(e,
+      col("vec_id") % 50 === 0, 10)))
+    CacheScope.releaseAll(s)
+  }
+
+  test("release() is a no-op on a loaded index") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_release")
+      .toString + "/idx"
+    Similarity.saveIvfIndex(base, dir)
+    val loaded = Similarity.loadIvfIndex(spark, dir)
+    loaded.release()
+    assert(rows(Similarity.ivfQuery(loaded,
+      col("vec_id") % 50 === 0, k = 10, nprobe = 8)).nonEmpty)
+  }
+
   test("overlapping vec_ids are rejected") {
     val err = intercept[IllegalArgumentException] {
       Similarity.appendToIvfIndex(base, emb.filter(col("vec_id") % 7 =!= 3))

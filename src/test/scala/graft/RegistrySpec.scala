@@ -28,6 +28,15 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("README's registry size matches SparkEntry.queries") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val sizes = Seq("""(\d+)-query registry""".r, """of (\d+) registry""".r)
+      .map(_.findFirstMatchIn(readme).map(_.group(1).toInt))
+    assert(sizes == Seq.fill(2)(Some(SparkEntry.queries.size)),
+      "README.md's registry size is stale")
+  }
+
   test("every oracle key has a query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")

@@ -157,4 +157,22 @@ class StreamAdmissionSpec extends AnyFunSuite {
     deliver(Seq.empty[(Long, String)])
     assert(spark.read.parquet(s"$state/docs").count() === 4)
   }
+
+  test("stream batches leave no checkpoint pinned (flags released)") {
+    val (src, cp, state) = (tmp("adm_src6"), tmp("adm_cp6"), tmp("adm_state6"))
+    StreamAdmission.seed(spark, seedCorpus, state, "doc_id", "text")
+    Seq((70L, nearText), (71L, freshText)).toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(src)
+    // every RDD the stream creates has a larger id than the marker
+    val marker = spark.sparkContext.emptyRDD[Int].id
+    assert(StreamAdmission.start(spark.readStream
+        .schema(seedCorpus.schema).parquet(src), state, cp,
+      "doc_id", "text").awaitTermination(120000))
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet
+      .filter(_ > marker)
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (pinned.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(pinned.isEmpty, s"stream left RDDs pinned: $pinned")
+  }
 }
